@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Waits until every event posted so far has reached every listener, so
+  * counts read after a pass include that pass's last job. The listener
+  * bus is private to Spark, hence this package.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
