@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool (round 14): steady-state A/B timings for named queries —
   * each query runs `reps` times in one JVM and every rep is printed,
   * so JIT/codegen warm-up (rep 1) separates from the steady state
-  * (reps 2+). The driver's bench stays the contract; this exists to
-  * judge optimization deltas without first-execution noise.
+  * (reps 2+); with reps=1 the steady line repeats rep 1. `graft.Bench`
+  * stays the contract; this exists to judge optimization deltas
+  * without first-execution noise.
   *
   * Usage: tools/run.sh graft.AbBench <sfDir> <reps> q1,q2,...
   */
@@ -41,8 +42,10 @@ object AbBench {
         System.err.println(f"[ab] $n%-30s rep$r $sec%8.2f s ($cnt rows)")
         sec
       }
-      System.err.println(f"[ab] $n%-30s steady ${secs.drop(1).min}%8.2f s " +
-        f"(min of reps 2..$reps; canary ${canary()}%.3f)")
+      val (steady, over) =
+        if (reps > 1) (secs.drop(1).min, s"min of reps 2..$reps") else (secs.head, "rep 1")
+      System.err.println(f"[ab] $n%-30s steady $steady%8.2f s " +
+        f"($over; canary ${canary()}%.3f)")
     }
     spark.stop()
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.functions.StringSimilarity
+import graft.graph.CoPurchase
 import graft.ops.Ops.dsum
 import graft.sampling.Sampling.knuthPriority
 
@@ -34,45 +35,18 @@ object Mining {
 
   // ---- rec1: item-item co-occurrence recommendations -----------------
 
-  /** Max distinct items per basket before the basket is discarded as a
-    * degenerate mega-basket. Co-occurrence pair fan-out is quadratic
-    * in basket size, so ONE crawler cart with 10^5 items would emit
-    * 10^10 pairs; the standard market-basket guard is to drop (or
-    * sample) outlier baskets, and the cap makes the per-row work a
-    * hard O(cap^2). TPC-H baskets top out at 7 lines, so nothing is
-    * dropped on the test data — the guard is for the 100 TB shape.
-    */
-  private val maxBasket = 50
-
   /** Item-to-item "customers who bought X also bought Y" scores over
-    * lineitem baskets (reference domain: co-occurring building
-    * portfolios, `/root/reference/portfoliograph/` builds the same
-    * pair graph from shared attributes).
-    *
-    * Scale shape: ONE shuffle groups each order into a sorted distinct
-    * item array (map-side combinable); ordered pairs are generated
-    * WITHIN the row (no self-join of the fact table, no second pass
-    * over lineitem); the pair aggregate is the second shuffle; item
-    * frequencies come from the same basket frame and join back
-    * broadcast (the item-count table is |parts|-sized, a dimension).
-    * Cosine score n_ab/sqrt(n_a*n_b) is one sqrt + one division —
-    * both correctly-rounded IEEE ops, so round(·,6) is engine-exact.
+    * lineitem baskets: the [[CoPurchase]] pairs, with item frequencies
+    * from the same basket frame joined back broadcast (the item-count
+    * table is |parts|-sized, a dimension). Cosine score
+    * n_ab/sqrt(n_a*n_b) is one sqrt + one division — both
+    * correctly-rounded IEEE ops, so round(·,6) is engine-exact.
     */
   def rec1ItemCooc(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val baskets = li.groupBy("ok")
-      .agg(sort_array(collect_set(col("pk"))).as("items"))
-      .filter(size(col("items")).between(2, maxBasket))
-    val pairs = baskets
-      .select(col("items"), explode(col("items")).as("a"))
-      .select(col("a"),
-        explode(filter(col("items"), x => x > col("a"))).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= 2)
+    val baskets = CoPurchase.orderBaskets(s, d)
     val itemN = baskets.select(explode(col("items")).as("pk"))
       .groupBy("pk").agg(count(lit(1)).as("n"))
-    pairs
+    CoPurchase.pairs(baskets)
       .join(broadcast(itemN.select(col("pk").as("a"), col("n").as("n_a"))), "a")
       .join(broadcast(itemN.select(col("pk").as("b"), col("n").as("n_b"))), "b")
       .select(col("a"), col("b"), col("n_ab"),
@@ -82,7 +56,7 @@ object Mining {
 
   // ---- kcore1: bounded k-core peel over the co-purchase graph --------
 
-  /** Three peeling rounds of the k=2 core over the rec1 co-purchase
+  /** Three peeling rounds of the k=2 core over the [[CoPurchase]]
     * graph (edge = item pair co-bought in >= 2 baskets) — k=2 so the
     * core stays non-degenerate across the SF series (the sparser
     * sf0.1 graph has an empty 3-core). Each round:
@@ -97,21 +71,9 @@ object Mining {
     * surviving nodes with their residual degree after the third
     * restriction.
     */
-  def kcore1KcorePeel(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val baskets = li.groupBy("ok")
-      .agg(sort_array(collect_set(col("pk"))).as("items"))
-      .filter(size(col("items")).between(2, maxBasket))
-    val e0 = baskets
-      .select(col("items"), explode(col("items")).as("a"))
-      .select(col("a"),
-        explode(filter(col("items"), x => x > col("a"))).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= 2)
-      .select(col("a"), col("b"))
-    kcorePeel(e0, k = 2, rounds = 3)
-  }
+  def kcore1KcorePeel(s: SparkSession, d: String): DataFrame =
+    kcorePeel(CoPurchase.pairs(CoPurchase.orderBaskets(s, d)).select("a", "b"),
+      k = 2, rounds = 3)
 
   /** The peel kernel: `rounds` rounds of degree-filter + edge
     * restriction over a canonical (a<b, distinct) edge list; returns
@@ -449,31 +411,14 @@ object Mining {
     "sax1_sax_symbols" -> (sax1SaxSymbols _))
 
   val oracles: Map[String, String] = Map(
-    "rec1_item_cooc" ->
-      """WITH d AS MATERIALIZED (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         sz AS (SELECT ok FROM d GROUP BY ok
-                HAVING count(*) BETWEEN 2 AND 50),
-         dd AS MATERIALIZED (SELECT d.* FROM d JOIN sz USING (ok)),
-         pc AS (SELECT x.pk AS a, y.pk AS b, count(*) AS n_ab
-                FROM dd x JOIN dd y ON x.ok = y.ok AND x.pk < y.pk
-                GROUP BY 1, 2 HAVING count(*) >= 2),
+    "rec1_item_cooc" -> (CoPurchase.oracleCte + """,
          ic AS MATERIALIZED (SELECT pk, count(*) AS n FROM dd GROUP BY 1)
          SELECT a, b, CAST(n_ab AS BIGINT) AS n_ab,
                 round(CAST(n_ab AS DOUBLE) /
                       sqrt(CAST(ia.n * ib.n AS DOUBLE)), 6) AS score6
          FROM pc JOIN ic ia ON pc.a = ia.pk
-                 JOIN ic ib ON pc.b = ib.pk""",
-    "kcore1_kcore_peel" ->
-      """WITH d AS MATERIALIZED (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         sz AS (SELECT ok FROM d GROUP BY ok
-                HAVING count(*) BETWEEN 2 AND 50),
-         dd AS MATERIALIZED (SELECT d.* FROM d JOIN sz USING (ok)),
-         e0 AS MATERIALIZED (
-           SELECT x.pk AS a, y.pk AS b
-           FROM dd x JOIN dd y ON x.ok = y.ok AND x.pk < y.pk
-           GROUP BY 1, 2 HAVING count(*) >= 2),
+                 JOIN ic ib ON pc.b = ib.pk"""),
+    "kcore1_kcore_peel" -> (CoPurchase.oracleCte + """,
          k1 AS MATERIALIZED (
            SELECT node FROM (
              SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0)
@@ -497,7 +442,7 @@ object Mining {
            JOIN k3 x ON e2.a = x.node JOIN k3 y ON e2.b = y.node)
          SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
            SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3)
-         GROUP BY 1""",
+         GROUP BY 1"""),
     "dd13_containment" ->
       """WITH tok AS (SELECT doc_id,
              regexp_split_to_array(lower(trim(text)), '\s+') AS ts

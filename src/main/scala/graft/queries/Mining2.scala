@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.graph.CoPurchase
 
 /** Round-10 batch two: frequent-itemset mining beyond pairs (apriori
   * triples), link-analysis scoring on a bipartite graph (HITS hubs/
@@ -32,30 +33,19 @@ object Mining2 {
     * mined at the product-FAMILY granularity (partkey mod 2000 — the
     * standard category-level rollup; at raw-SKU granularity triple
     * support is a vanishing function of catalog size, so the itemset
-    * density would be an artifact of the SF, not of behavior). Same
-    * scale contract as rec1: baskets collapse in ONE map-side
-    * combinable shuffle, triples generate WITHIN the row under the
-    * mega-basket cap (fan-out a hard O(cap^3/6) — the apriori
-    * candidate explosion lives inside a bounded row, never in a
-    * join), and the only other shuffle is the triple-count aggregate.
+    * density would be an artifact of the SF, not of behavior). The
+    * baskets and triples are [[CoPurchase]]'s: 3..[[CoPurchase.MaxBasket]]
+    * distinct families per basket, so the apriori candidate explosion
+    * stays a hard O(cap^3/6) inside one row, never a join.
     */
   def apr1FrequentTriples(s: SparkSession, d: String): DataFrame = {
     // fan-out below the basket collapse (guide §2): the map-side
     // collect_set partials otherwise run single-core over the scan
-    val baskets = graft.ops.Ops.fanOutForCompute(
-        Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("ok"),
-            pmod(col("l_partkey"), lit(2000L)).as("pk")), col("ok"))
-      .groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("items"))
-      .filter(size(col("items")).between(3, 50))
-    baskets
-      .select(col("items"), explode(col("items")).as("a"))
-      .select(col("items"), col("a"),
-        explode(filter(col("items"), x => x > col("a"))).as("b"))
-      .select(col("a"), col("b"),
-        explode(filter(col("items"), x => x > col("b"))).as("c"))
-      .groupBy("a", "b", "c").agg(count(lit(1)).as("supp"))
-      .filter(col("supp") >= 2)
+    val items = graft.ops.Ops.fanOutForCompute(
+      Tables.lineitem(s, d)
+        .select(col("l_orderkey").as("ok"),
+          pmod(col("l_partkey"), lit(2000L)).as("pk")), col("ok"))
+    CoPurchase.triples(CoPurchase.baskets(items, 3))
   }
 
   // ---- hits1: bipartite HITS hub/authority scores --------------------
@@ -247,11 +237,11 @@ object Mining2 {
 
   val oracles: Map[String, String] = Map(
     "apr1_frequent_triples" ->
-      """WITH d AS MATERIALIZED (
+      s"""WITH d AS MATERIALIZED (
            SELECT DISTINCT l_orderkey AS ok, l_partkey % 2000 AS pk
            FROM lineitem),
          sz AS (SELECT ok FROM d GROUP BY ok
-                HAVING count(*) BETWEEN 3 AND 50),
+                HAVING count(*) BETWEEN 3 AND ${CoPurchase.MaxBasket}),
          dd AS MATERIALIZED (SELECT d.* FROM d JOIN sz USING (ok))
          SELECT x.pk AS a, y.pk AS b, z.pk AS c,
                 CAST(count(*) AS BIGINT) AS supp

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.graph.CoPurchase
 
 /** Round-11 batch five: propagation / featurization / threshold
   * signals — personalized PageRank from a seed node (random walk with
@@ -23,36 +24,20 @@ import graft.Tables
   */
 object Signals {
 
-  private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val baskets = li.groupBy("ok")
-      .agg(sort_array(collect_set(col("pk"))).as("items"))
-      .filter(size(col("items")).between(2, 50))
-    baskets
-      .select(col("items"), explode(col("items")).as("a"))
-      .select(col("a"),
-        explode(filter(col("items"), x => x > col("a"))).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= 2)
-      .select(col("a"), col("b"))
-  }
-
   // ---- ppr1: personalized PageRank ------------------------------------
 
   /** Personalized PageRank from the smallest graph node: 3 rounds of
-    * p' = 0.85·Σ_in p/deg + 0.15·[v = seed] over the co-purchase
-    * graph. Per-edge terms are 12-dp DECIMAL summands and per-round
-    * scores re-quantize to 9 dp (the hits1 iterative-float rule), so
-    * the oracle replays the rounds bit-for-bit. Per round: one
-    * co-partitioned join + one aggregate; mass concentrates in the
+    * p' = 0.85·Σ_in p/deg + 0.15·[v = seed] over the [[CoPurchase]]
+    * graph's symmetric edge list. Per-edge terms are 12-dp DECIMAL
+    * summands and per-round scores re-quantize to 9 dp (the hits1
+    * iterative-float rule), so the oracle replays the rounds
+    * bit-for-bit. Per round: one co-partitioned join + one aggregate;
+    * mass concentrates in the
     * seed's neighborhood — the similarity score graph recommenders
     * rank by.
     */
   def ppr1PersonalizedPagerank(s: SparkSession, d: String): DataFrame = {
-    val e = coPurchaseEdges(s, d)
-    val dir = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+    val dir = CoPurchase.directed(CoPurchase.orderBaskets(s, d))
       .localCheckpoint(true)
     val deg = dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val seedDf = deg.agg(min(col("src")).as("seed"))
@@ -105,17 +90,15 @@ object Signals {
 
   // ---- deg1: degree distribution + power-law fit ----------------------
 
-  /** Co-purchase degree distribution with a log-log OLS slope (the
+  /** [[CoPurchase]] degree distribution with a log-log OLS slope (the
     * power-law exponent — the first thing to check before sizing
     * skew handling for a graph workload). Histogram = two small
     * aggregates; the fit runs on the ≤max-degree-row histogram with
     * the zipf1 DECIMAL-moment discipline; the slope rides every row.
     */
   def deg1DegreeDistribution(s: SparkSession, d: String): DataFrame = {
-    val e = coPurchaseEdges(s, d)
-    val deg = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+    val deg = CoPurchase.directed(CoPurchase.orderBaskets(s, d))
+      .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
     val hist = deg.groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
     val terms = hist.select(
       round(log(col("degree").cast("double")), 9).cast("decimal(18,9)")
@@ -175,19 +158,7 @@ object Signals {
     "deg1_degree_distribution" -> (deg1DegreeDistribution _),
     "ots1_otsu_threshold" -> (ots1OtsuThreshold _))
 
-  private val edgeCte =
-    """WITH d AS MATERIALIZED (
-         SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-       sz AS (SELECT ok FROM d GROUP BY ok
-              HAVING count(*) BETWEEN 2 AND 50),
-       dd AS MATERIALIZED (SELECT d.* FROM d JOIN sz USING (ok)),
-       e0 AS MATERIALIZED (
-         SELECT x.pk AS a, y.pk AS b
-         FROM dd x JOIN dd y ON x.ok = y.ok AND x.pk < y.pk
-         GROUP BY 1, 2 HAVING count(*) >= 2),
-       dir AS MATERIALIZED (
-         SELECT a AS src, b AS dst FROM e0
-         UNION ALL SELECT b, a FROM e0),
+  private val edgeCte = CoPurchase.oracleCte + """,
        deg AS MATERIALIZED (
          SELECT src, count(*) AS deg FROM dir GROUP BY 1)"""
 

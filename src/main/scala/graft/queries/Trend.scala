@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.graph.CoPurchase
 
 /** Round-11 batch three: robust trend + seasonality + community
   * structure — the Theil-Sen median-of-slopes estimator (the robust
@@ -100,8 +101,8 @@ object Trend {
 
   // ---- lp1: label-propagation communities -----------------------------
 
-  /** Synchronous label propagation over the co-purchase graph (same
-    * canonical a<b edge list as kcore1/rec1): labels start as node
+  /** Synchronous label propagation over the [[CoPurchase]] graph
+    * (its symmetric edge list): labels start as node
     * ids; each of 3 rounds every node adopts the MODE of its
     * neighbors' labels, ties to the smaller label — (count DESC,
     * label ASC) is a total order, so rounds are deterministic and the
@@ -110,20 +111,7 @@ object Trend {
     * eagerly localCheckpoint'ed (the PageRank plan-growth lesson).
     */
   def lp1LabelProp(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val baskets = li.groupBy("ok")
-      .agg(sort_array(collect_set(col("pk"))).as("items"))
-      .filter(size(col("items")).between(2, 50))
-    val edges = baskets
-      .select(col("items"), explode(col("items")).as("a"))
-      .select(col("a"),
-        explode(filter(col("items"), x => x > col("a"))).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= 2)
-      .select(col("a"), col("b"))
-    val dir = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
+    val dir = CoPurchase.directed(CoPurchase.orderBaskets(s, d))
       .localCheckpoint(true)
     var labels = dir.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
@@ -199,19 +187,7 @@ object Trend {
                 CAST(r AS DOUBLE) AS resid6,
                 CAST(abs(CAST(r AS DOUBLE)) > sd * 2 AS INT) AS anomaly
          FROM withr, mom""",
-    "lp1_label_prop" ->
-      """WITH d AS MATERIALIZED (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         sz AS (SELECT ok FROM d GROUP BY ok
-                HAVING count(*) BETWEEN 2 AND 50),
-         dd AS MATERIALIZED (SELECT d.* FROM d JOIN sz USING (ok)),
-         e0 AS MATERIALIZED (
-           SELECT x.pk AS a, y.pk AS b
-           FROM dd x JOIN dd y ON x.ok = y.ok AND x.pk < y.pk
-           GROUP BY 1, 2 HAVING count(*) >= 2),
-         dir AS MATERIALIZED (
-           SELECT a AS src, b AS dst FROM e0
-           UNION ALL SELECT b, a FROM e0),
+    "lp1_label_prop" -> (CoPurchase.oracleCte + """,
          l0 AS MATERIALIZED (
            SELECT DISTINCT src AS node, src AS label FROM dir),
          v1 AS (SELECT dst, label, count(*) AS votes
@@ -233,5 +209,5 @@ object Trend {
          SELECT dst AS node, label AS community FROM (
            SELECT dst, label, row_number() OVER (PARTITION BY dst
              ORDER BY votes DESC, label) AS rk FROM v3)
-         WHERE rk = 1""")
+         WHERE rk = 1"""))
 }

@@ -401,10 +401,33 @@ class PlanSpec extends SparkSpec {
 
   test("rec1 co-occurrence: no lineitem self-join — pairs explode within the basket row; item counts broadcast") {
     val plan = executedPlan(graft.queries.Mining.rec1ItemCooc(spark, sf))
-    // two Generate nodes (the two explodes), no SortMergeJoin anywhere
+    // three Generate nodes (posexplode + slice explode for the pairs,
+    // one explode for the item counts), no SortMergeJoin anywhere
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(plan.contains("Generate"), plan)
+  }
+
+  test("co-purchase kernel: no HOF lambda in pair/triple generation; directed edges from ONE scan, no Union") {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import graft.graph.CoPurchase
+    val baskets = CoPurchase.orderBaskets(spark, sf)
+    // an interpreted (CodegenFallback) lambda anywhere in the plan
+    // re-scans each basket per element — the kernel must not have one
+    def lambdas(df: DataFrame) = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions).count(_.exists(_.isInstanceOf[LambdaFunction]))
+    assert(lambdas(CoPurchase.pairs(baskets)) == 0)
+    assert(lambdas(CoPurchase.triples(baskets)) == 0)
+    assert(lambdas(graft.queries.Mining.rec1ItemCooc(spark, sf)) == 0)
+    assert(lambdas(graft.queries.Mining2.apr1FrequentTriples(spark, sf)) == 0)
+    // both directions come out of one pair aggregate: one lineitem
+    // scan, no Union re-running the aggregate per direction
+    val dir = CoPurchase.directed(baskets)
+    dir.collect()
+    val nodes = flattenPlan(dir.queryExecution.executedPlan)
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1, nodes.head)
+    assert(!nodes.exists(_.isInstanceOf[UnionExec]), nodes.head)
   }
 
   test("bs1 bootstrap: all 32 replicates in ONE aggregate pass — no explode, single scan, no join") {
